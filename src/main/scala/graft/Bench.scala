@@ -67,8 +67,11 @@ object Bench {
       ()
     }
     def snapshot: (Int, Long) = (stagesN.get, taskMs.get)
-    /** poll until two consecutive reads agree (bounded ~1s) */
-    def settled(): (Int, Long) = {
+    /** poll until two consecutive reads agree (bounded ~1s); the flag
+      * is false when the bound ran out first — the events still in
+      * flight are then charged to the next run, and the record says so
+      */
+    def settled(): ((Int, Long), Boolean) = {
       var prev = snapshot
       var spins = 0
       Thread.sleep(50)
@@ -76,9 +79,16 @@ object Bench {
       while (cur != prev && spins < 20) {
         prev = cur; Thread.sleep(50); cur = snapshot; spins += 1
       }
-      cur
+      (cur, cur == prev)
     }
   }
+
+  /** one run's wall seconds and window-insensitive deltas: stages,
+    * summed task seconds, generated classes compiled, and whether the
+    * listener counters settled
+    */
+  private case class Run(wall: Double, stages: Int, taskS: Double,
+      compiles: Long, settled: Boolean)
 
   /** rewrite each sf table as a multi-file parquet copy; returns the
     * staged dir. Events' ns-as-long column passes through as written
@@ -419,8 +429,13 @@ object Bench {
     val counter = new RunCounter
     spark.sparkContext.addSparkListener(counter)
 
-    /** wall seconds + window-insensitive (stages, task-time s) deltas */
-    def runOnce(fn: QueryFn, clear: Boolean = true): (Double, Int, Double) = {
+    // generated classes compiled so far in this JVM (one histogram
+    // sample per Janino compilation; a codegen cache hit adds none)
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        .getCount
+
+    def runOnce(fn: QueryFn, clear: Boolean = true): Run = {
       // drop persisted intermediates (x03's candidate set, x06's bucket
       // table): they exist for intra-query branch reuse, and Spark's
       // CacheManager would otherwise hand them to the NEXT run by plan
@@ -428,11 +443,13 @@ object Bench {
       // DuckDB baseline does
       if (clear) spark.catalog.clearCache()
       val (s0, t0ms) = counter.snapshot
+      val c0 = compiles()
       val t0 = System.nanoTime()
       fn(spark, runDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      val (s1, t1ms) = counter.settled()
-      (wall, s1 - s0, (t1ms - t0ms) / 1000.0)
+      val c1 = compiles()
+      val ((s1, t1ms), ok) = counter.settled()
+      Run(wall, s1 - s0, (t1ms - t0ms) / 1000.0, c1 - c0, ok)
     }
 
     val failed = scala.collection.mutable.ListBuffer[(String, String)]()
@@ -474,6 +491,15 @@ object Bench {
     // summed-task-time and min stage count across the timed sweeps
     val taskTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
     val stageCounts = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // most generated classes any timed run of the query compiled: near
+    // 0 while the query's classes stay in the codegen cache, and the
+    // query's whole class count once a working set outgrows the bound
+    val compileCounts = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // runs (warm-up included) whose counters had not settled when the
+    // poll gave up, so the NEXT run's stage/task figures carry its tail
+    val unsettled = scala.collection.mutable.LinkedHashMap[String, Double]()
+    def noteSettled(name: String, r: Run): Unit =
+      if (!r.settled) unsettled(name) = unsettled.getOrElse(name, 0.0) + 1
     val amp = amplify.getOrElse(0)
     var passes = 0 // completed warm-up/sweep passes across both sections
     def emitPartial(): Unit = {
@@ -501,13 +527,17 @@ object Bench {
       val samples = scala.collection.mutable.LinkedHashMap[String,
         scala.collection.mutable.ListBuffer[Double]]()
       qs.foreach { case (name, fn) =>
-        // warm-up: JIT + parquet footer cache + codegen cache; its time
-        // rides as the provisional partial-output entry
+        // warm-up: JIT and the parquet footer cache; its time rides as
+        // the provisional partial-output entry. It compiles the query's
+        // generated classes, which the timed runs reuse only while all
+        // queries' classes fit the codegen cache bound (GraftSession) —
+        // `codegen_compiles` shows when they do not
         try {
-          val (t, _, _) = runOnce(fn, clear)
+          val r = runOnce(fn, clear)
+          noteSettled(name, r)
           samples(name) = scala.collection.mutable.ListBuffer()
-          outMed(name) = t
-          outMin(name) = t
+          outMed(name) = r.wall
+          outMin(name) = r.wall
         } catch {
           case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -524,15 +554,18 @@ object Bench {
         qs.foreach { case (name, fn) =>
           if (alive(name)) {
             try {
-              val (t, st, tt) = runOnce(fn, clear)
-              samples(name) += t
+              val r = runOnce(fn, clear)
+              noteSettled(name, r)
+              samples(name) += r.wall
               // min across sweeps: stage counts are deterministic (AQE
               // decisions aside); task time is the window-insensitive
               // floor the adjudications use
-              if (!stageCounts.contains(name) || st < stageCounts(name))
-                stageCounts(name) = st.toDouble
-              if (!taskTimes.contains(name) || tt < taskTimes(name))
-                taskTimes(name) = tt
+              if (!stageCounts.contains(name) || r.stages < stageCounts(name))
+                stageCounts(name) = r.stages.toDouble
+              if (!taskTimes.contains(name) || r.taskS < taskTimes(name))
+                taskTimes(name) = r.taskS
+              compileCounts(name) =
+                math.max(compileCounts.getOrElse(name, 0.0), r.compiles.toDouble)
             } catch {
               case e: Throwable =>
                 val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -543,6 +576,7 @@ object Bench {
                 outMin.remove(name)
                 stageCounts.remove(name)
                 taskTimes.remove(name)
+                compileCounts.remove(name)
             }
           }
         }
@@ -662,7 +696,7 @@ object Bench {
     val gateKeys =
       s""""load_gate":${jstr(loadGate)},"start_load":${r3(startLoad)},"quiet_wait_s":$quietWaitedS,"canonical":$canonical,$wiKeys"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(sfTimings)},"queries_min":${jmap(sfMins)},"m_queries":${jmap(mTimings)},"m_queries_min":${jmap(mMins)},"task_time_s":${jmapR(taskTimes)},"stages":${jmapI(stageCounts)},"m_total":${mTimings.values.sum},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${sfMins.values.sum},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(sfTimings)},"queries_min":${jmap(sfMins)},"m_queries":${jmap(mTimings)},"m_queries_min":${jmap(mMins)},"task_time_s":${jmapR(taskTimes)},"stages":${jmapI(stageCounts)},"codegen_compiles":${jmapI(compileCounts)},"unsettled":${jmapI(unsettled)},"m_total":${mTimings.values.sum},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${sfMins.values.sum},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
     val jsonShort =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmapR(sfTimings)},"m_total":${r3(mTimings.values.sum)},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${r3(sfMins.values.sum)},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
     // the 175-query map outgrew the stdout tail the driver keeps — the

@@ -27,18 +27,21 @@ object JobTrace {
     val fn = SparkEntry.queries(name)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    // stage -> its job's row; a task of a stage with no mapped job (one
+    // submitted before tracing began) finds null and is skipped. A
+    // stage -> jobId map of Ints would unbox that null to job 0.
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     var tracing = false
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = if (tracing) {
         val names = j.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct
         val d = names.mkString(" | ").take(180)
-        jobs.put(j.jobId, JobRow(j.jobId, d, j.stageIds.length, 0, 0L))
-        j.stageIds.foreach(s => stageToJob.put(s, j.jobId))
+        val row = JobRow(j.jobId, d, j.stageIds.length, 0, 0L)
+        jobs.put(j.jobId, row)
+        j.stageIds.foreach(s => stageToJob.put(s, row))
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (tracing) {
-        val j = stageToJob.get(t.stageId)
-        val row = jobs.get(j)
+        val row = stageToJob.get(t.stageId)
         if (row != null && t.taskInfo != null) {
           row.tasks += 1
           row.taskMs += t.taskInfo.finishTime - t.taskInfo.launchTime

@@ -8,6 +8,44 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Bound on Spark's generated-class cache (`spark.sql.codegen.cache.
+    * maxEntries`, default 100). The cache is an LRU keyed by (context
+    * class loader, generated source) and shared by every query in the
+    * JVM. One execution of a media funnel (x86/x91/x93) compiles
+    * 134-170 classes, more than the default holds, so the LRU evicted
+    * each class before its next use and every repeated execution
+    * recompiled ~95% of its code. The bound is the smallest round
+    * number that holds one full pass over the query catalog: measured
+    * on a 4-core host at sf0.01, one pass over all 181 queries compiles
+    * 1,888-1,900 distinct classes and a second pass then compiles 16;
+    * Metaspace stands at ~207 MB after it. The cache is sized once per
+    * JVM, by the first code generation, so the bound takes effect only
+    * when a session from this builder exists by then.
+    */
+  private[graft] val CodegenCacheMaxEntries = 2000
+
+  /** Artifact isolation gives each cloned session (every streaming
+    * query runs on one) its own executor class loader, and that loader
+    * is part of the codegen cache key — so a re-run of a stream gate
+    * recompiled every class of the previous run (2-13 per gate on the
+    * stream queries). The engine adds no jars, files or artifacts at run
+    * time and does not serve Spark Connect, so there is nothing to
+    * isolate; with it off, all tasks share one loader and a re-run
+    * compiles nothing.
+    */
+  private[graft] val ArtifactIsolation = false
+
+  /** Spark names each whole-stage class after its codegen stage id, and
+    * AQE numbers stages in the order it plans them, which varies from
+    * run to run. The same stage code then carries a different class
+    * name, so its source, and its cache key, differ: with the two
+    * settings above, each repeated x91 execution over the committed
+    * media fixture still recompiled 40-57 of its 160 classes. Without
+    * the id it recompiles 2-8 of 108-114 (identical stages now share
+    * one class). The id only decorates class names in stack traces.
+    */
+  private[graft] val CodegenStageIdInClassName = false
+
   /** Builder pre-configured for this engine. `cores` drives both the local
     * master threads and shuffle parallelism — on a real cluster the same
     * code runs with `spark.sql.shuffle.partitions` sized to the cluster.
@@ -64,6 +102,12 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark cannot represent;
       // read as long nanos and convert once at ingest (Tables.load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // generated code is compiled once per JVM and reused across
+      // executions (see the two constants above)
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheMaxEntries.toLong)
+      .config("spark.sql.artifact.isolation.enabled", ArtifactIsolation)
+      .config("spark.sql.codegen.useIdInClassName", CodegenStageIdInClassName)
 
   def local(appName: String = "hielospark"): SparkSession = {
     val s = builder(appName).getOrCreate()

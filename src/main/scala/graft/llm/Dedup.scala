@@ -318,6 +318,10 @@ object Dedup {
     * takes the alternating-star path unchanged. 0 disables (the
     * loop-pinning specs force the distributed path). The cap bounds
     * driver memory by construction: 1M edges ≈ tens of MB transient.
+    *
+    * The loop throws an `IllegalStateException` when `maxIter` rounds
+    * end before the edge set is a star forest: labels read off an
+    * unconverged edge set are wrong.
     */
   def clustersFromPairs(ids: DataFrame, pairs: DataFrame,
       maxIter: Int = 25,
@@ -491,14 +495,14 @@ object Dedup {
     // min-rooted star forests are exactly the joint fixed points of the
     // two operators (paper §3), so testing the OUTPUT directly stops
     // one alternation earlier than comparing consecutive edge sets.
-    def starViolations(t: DataFrame): Long =
+    def violators(t: DataFrame): DataFrame =
       t.select(col("hi").as("n"), lit(1L).as("h"))
         .union(t.select(col("lo").as("n"), lit(0L).as("h")))
         .groupBy(col("n"))
         .agg(sum(col("h")).as("nHi"), count(lit(1)).as("tot"))
         .filter((col("nHi") > 0 && col("nHi") < col("tot")) ||
           col("nHi") > 1)
-        .limit(1).count()
+    def starViolations(t: DataFrame): Long = violators(t).limit(1).count()
     var e = edges
     var iter = 0
     var notStar = starViolations(e)
@@ -518,6 +522,14 @@ object Dedup {
       e = e2
       iter += 1
     }
+    // labels read off a non-star edge set are wrong (a chain's tail
+    // keeps a non-minimum label), so running out of rounds is an error,
+    // never a silent result
+    if (notStar > 0)
+      throw new IllegalStateException(
+        s"connected components did not converge: $iter rounds run " +
+          s"(maxIter = $maxIter), ${violators(e).count()} nodes still " +
+          "violate the star-forest condition")
     // read labels off the star forest: l(v) = min(v ∪ N(v)); vertices
     // whose component collapsed away from the edge set keep themselves
     val nbrMin = dir(e).groupBy(col("u")).agg(min(col("v")).as("mn"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjectio
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Hard codegen-compilation gate for every native expression (r15).
   *
@@ -25,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * checks the compiled projection agrees with the interpreted eval on a
   * sample row (both null and non-null inputs).
   */
-class CodegenCompileSpec extends AnyFunSuite {
+class CodegenCompileSpec extends graft.SparkSpec {
 
   private def strArr(vs: String*): ArrayData =
     new GenericArrayData(vs.map(v =>
@@ -42,6 +41,11 @@ class CodegenCompileSpec extends AnyFunSuite {
     */
   private def check(name: String, expr: Expression,
       rows: Seq[InternalRow]): Unit = {
+    // the shared session must exist before the JVM's first code
+    // generation: Spark sizes its generated-class cache once, from the
+    // conf in force then, and without a session that is the default
+    // bound instead of GraftSession's
+    spark
     val proj = GenerateUnsafeProjection.generate(Seq(expr))
     rows.foreach { row =>
       val compiled = proj(row).get(0, expr.dataType)

@@ -137,6 +137,23 @@ class DedupSpec extends SparkSpec {
       "every vertex of the shuffled path must label to the global min")
   }
 
+  test("CC loop that runs out of rounds throws instead of mislabeling") {
+    // a 200-node monotone path needs more than 2 star alternations; the
+    // labels read off after 2 would give the tail a non-minimum label
+    val s = spark
+    import s.implicits._
+    val n = 200
+    val ids = (0 until n).map(_.toLong).toDF("doc_id")
+    val pairs = (0 until n - 1).map(i => (i.toLong, i.toLong + 1))
+      .toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.clusterLabels(ids, pairs, maxIter = 2, localEdgeCap = 0)
+    }
+    assert(e.getMessage.contains("2 rounds run"), e.getMessage)
+    assert(e.getMessage.matches("(?s).*, [1-9][0-9]* nodes still violate.*"),
+      e.getMessage)
+  }
+
   test("CC loop: plan node count AND stats digits stay flat per round") {
     // the r10 x71 postmortem, spec-pinned: Dataset.checkpoint preserves
     // the origin plan's statistics in its LogicalRDD, so a loop that
